@@ -25,7 +25,12 @@ No code is copied from the reference; file:line citations in docstrings
 point at the behavior being matched.
 """
 
+from matrixprofile_spark import _worker
 from matrixprofile_spark.session import get_spark  # noqa: F401
 from matrixprofile_spark.plans.compute import analyze, compute  # noqa: F401
 
 __version__ = "0.1.0"
+
+# inside a Python worker task: stop Spark's per-task import-cache reset
+# from re-parsing pyspark.zip and the Spark jar (see _worker)
+_worker.install()

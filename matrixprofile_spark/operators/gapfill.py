@@ -334,7 +334,12 @@ def gap_report(series: DataFrame, step_s: int = 60) -> DataFrame:
             F.coalesce(F.max("_hole"), F.lit(0)).alias("longest_gap"),
         )
         .select(
-            "conv_id", "metric", "n_observed", "n_missing", "longest_gap",
+            "conv_id", "metric", "n_observed",
+            # the oracle's sum(BIGINT) is a HUGEINT, which reaches pandas
+            # as float64; a double keeps the driver's typed hash equal
+            # (every count here is far below 2**53, so it stays exact)
+            F.col("n_missing").cast("double").alias("n_missing"),
+            "longest_gap",
             # Integer ppm, not round(double, 6): Spark rounds via exact
             # BigDecimal HALF_UP while DuckDB rounds in binary, so the two
             # can land on adjacent doubles.  Integer DIV is engine-exact.

@@ -3,8 +3,9 @@
 Local-mode testing uses ``local[N]``; the same configs are what we would
 ship for a 1000-executor cluster (AQE on, Arrow on, sane shuffle
 partitioning). Scale-sensitive knobs are centralized here so the bench
-harness can run the identical job at two parallelism levels (local[8] vs
-local[32]) for the scaling-efficiency evidence.
+harness can run the identical job at two parallelism levels for the
+scaling-efficiency evidence: ``SPARK_GRAFT_SCALE_LO``/``_HI`` cores, 4 vs 16
+by default and 1 vs 4 on a 4-core host.
 """
 
 from __future__ import annotations

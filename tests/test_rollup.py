@@ -316,11 +316,14 @@ def test_gap_report_counts_null_valued_buckets_like_oracle(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, metric string, idx long, ts_epoch long, "
               "value double")
+    report = gapfill.gap_report(df, 60)
+    # the oracle's sum(BIGINT) is a HUGEINT, which pandas reads as float64
+    assert dict(report.dtypes)["n_missing"] == "double"
     got = {
         (r["conv_id"], r["metric"]):
             (r["n_observed"], r["n_missing"], r["longest_gap"],
              r["coverage_ppm"])
-        for r in gapfill.gap_report(df, 60).collect()
+        for r in report.collect()
     }
     duck = duckdb.connect()
     duck.execute("CREATE TABLE t AS SELECT * FROM (VALUES "
@@ -352,3 +355,14 @@ FROM g GROUP BY 1, 2
     assert got == want
     assert got[("c1", "m")] == (3, 1, 1, 750000)
     assert got[("c2", "m")] == (1, 0, 0, 1000000)
+
+
+def test_check_oracle_compare_is_dtype_strict():
+    """Equal values in different dtype families (int64 vs float64) fail
+    the local gate, as they fail the driver's typed hash."""
+    from tools.check_oracle import compare
+
+    ints = pd.DataFrame({"k": ["a", "b"], "n": np.array([3, 0], dtype="int64")})
+    floats = ints.assign(n=ints["n"].astype("float64"))
+    assert compare(ints, floats, "q") == ["col n: dtype spark=int64 duckdb=float64"]
+    assert compare(floats, floats.copy(), "q") == []

@@ -2,8 +2,9 @@
 
 Runs every __spark_entry__.queries() entry on Spark and its oracle_sql()
 twin on DuckDB (views over the sf parquet tables pre-registered), then
-compares row count, schema width, and an order-insensitive value hash
-(columns sorted by name, rows sorted, floats bit-compared).
+compares row count, schema width, each column's dtype family (int, float,
+string) and an order-insensitive value hash (columns sorted by name, rows
+sorted, floats bit-compared).
 
 Usage: python tools/check_oracle.py [--json=PATH] [sf_dir] [query ...]
 
@@ -36,6 +37,12 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
+def _family(dtype) -> str:
+    """int, float, string (object) or the numpy kind for anything else."""
+    return {"i": "int", "u": "int", "f": "float", "O": "string",
+            "U": "string", "S": "string"}.get(dtype.kind, dtype.kind)
+
+
 def compare(spdf: pd.DataFrame, ddf: pd.DataFrame, name: str) -> list[str]:
     errs = []
     if len(spdf) != len(ddf):
@@ -48,7 +55,12 @@ def compare(spdf: pd.DataFrame, ddf: pd.DataFrame, name: str) -> list[str]:
     a, b = _canon(spdf), _canon(ddf)
     for c in a.columns:
         av, bv = a[c].to_numpy(), b[c].to_numpy()
-        if np.issubdtype(av.dtype, np.floating) or np.issubdtype(bv.dtype, np.floating):
+        # a typed hash tells int64 from float64 even when the values agree,
+        # so a dtype-family mismatch fails here too instead of being cast away
+        if _family(av.dtype) != _family(bv.dtype):
+            errs.append(f"col {c}: dtype spark={spdf[c].dtype} duckdb={ddf[c].dtype}")
+            continue
+        if _family(av.dtype) == "float":
             av = av.astype(np.float64)
             bv = bv.astype(np.float64)
             both_nan = np.isnan(av) & np.isnan(bv)
