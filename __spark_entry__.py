@@ -176,11 +176,11 @@ def _q_rollup_1h_stats(spark, sf_dir):
 
 def _q_cascade_fused(spark, sf_dir):
     """All three retention tiers written in ONE Spark action
-    (materialize_cascade: tier-union + partitionBy("tier") — the shared
-    raw→1m stage is computed once) and read back; every tier row must
-    equal the per-tier batch oracles. This is the physical path the
-    scaling probe times, oracle-checked end-to-end through its actual
-    write+read."""
+    (materialize_cascade: raw→1m aggregated once, 1m/1h/1d emitted by
+    one re-aggregation of the 1m sketches, partitionBy("tier")) and read
+    back; every tier row must equal the per-tier batch oracles. This is
+    the physical path the scaling probe times, oracle-checked end-to-end
+    through its actual write+read."""
     import tempfile
 
     ser = _series(spark, sf_dir)

@@ -5,20 +5,24 @@ Generalizes the reference's `statistics` operator
 re-aggregable materialized rollups. Each tier row carries an **algebraic
 sketch** — cnt/sum/min/max/sum_sq/first/last — chosen so that:
 
-- every coarser tier is computed *exactly* from the finer tier (sum of
-  sums, min of mins, min_by(first, bucket), …), never from raw → the
-  cascade reads 60× / 24× less data per hop;
+- every coarser tier is computed *exactly* from finer sketches (sum of
+  sums, min of mins, min_by(first, bucket), …), never from raw: raw is
+  aggregated once into 1m, and `cascade_union` re-aggregates the far
+  smaller 1m rows into 1h and 1d together;
 - mean = sum/cnt and population std = sqrt(sum_sq/cnt - (sum/cnt)^2) are
   recoverable at any tier without raw;
 - results are independent of partition count / aggregation order for
-  integer-valued metrics (exact float64 integer arithmetic), which is what
-  makes the `local[8]` vs `local[32]` runs bit-identical.
+  integer-valued metrics (exact float64 integer arithmetic), so any core
+  count and either path (`build_cascade`'s 1m→1h→1d chain or
+  `cascade_union`'s 1m→{1h, 1d}) yields bit-identical tiers.
 
 Scale notes (100 TB): the groupBy key is (conv_id, metric, bucket) — high
-cardinality and naturally well-distributed; partial aggregation
-(map-side combine) means the shuffle carries one sketch row per
-(group, map partition), not raw points. Hot conversations do NOT skew this
-stage because the bucket component splits them across reducers.
+cardinality; partial aggregation (map-side combine) means any shuffle
+carries one sketch row per (group, map partition), not raw points. On
+input of unknown partitioning the bucket component spreads a hot
+conversation across reducers; on `project_series` output the aggregates
+reuse its conv_id partitioning instead of shuffling, so a hot
+conversation stays in the one task its lag window already put it in.
 """
 
 from __future__ import annotations
@@ -94,22 +98,33 @@ def build_cascade(series: DataFrame) -> dict[str, DataFrame]:
 def cascade_union(series: DataFrame) -> DataFrame:
     """All three tiers as ONE DataFrame tagged by a `tier` column.
 
-    The three branches share the raw→1m aggregation subtree; Spark's
-    exchange / AQE query-stage reuse executes that shuffle — the only
-    scan of raw, the dominant cost — exactly once, and the 1h/1d
-    branches re-aggregate the (tiny) reduce-side sketch rows from the
-    reused stage. This is what makes `materialize_cascade` a
-    single-action, single-commit write of every tier."""
-    tiers = build_cascade(series)
-    parts = [
-        tiers[t].select(F.lit(t).alias("tier"), "conv_id", "metric",
-                        "bucket_epoch", *SKETCH_COLS)
-        for t in ("1m", "1h", "1d")
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    raw→1m runs once; one explode tags each 1m sketch row with its
+    (tier, bucket) pair for 1m, 1h and 1d, and one groupBy re-aggregates
+    the tagged rows exactly as `rollup_cascade` does (a 1m group holds
+    its single row; 1d reads the 1m rows directly, which is exact by the
+    same nesting and integer-sum arguments). Both groupBy keys contain
+    conv_id, so on a conv_id-clustered input (`project_series` output)
+    no shuffle is added and the input's window sort and the raw→1m
+    aggregate run once for all three tiers; on input of unknown
+    partitioning the 1m sketch rows take one extra exchange."""
+    b = F.col("bucket_epoch")
+    tagged = rollup_from_raw(series, TIERS_S["1m"]).select(
+        "*", F.explode(F.array(*[
+            F.struct(F.lit(t).alias("tier"),
+                     _bucket("bucket_epoch", s).alias("bucket"))
+            for t, s in TIERS_S.items()])).alias("tb"))
+    return tagged.groupBy(
+        F.col("tb.tier").alias("tier"), "conv_id", "metric",
+        F.col("tb.bucket").alias("bucket_epoch"),
+    ).agg(
+        F.sum("cnt").alias("cnt"),
+        F.sum("vsum").alias("vsum"),
+        F.min("vmin").alias("vmin"),
+        F.max("vmax").alias("vmax"),
+        F.sum("sum_sq").alias("sum_sq"),
+        F.min_by(F.col("vfirst"), b).alias("vfirst"),
+        F.max_by(F.col("vlast"), b).alias("vlast"),
+    )
 
 
 def materialize_cascade(
@@ -121,10 +136,10 @@ def materialize_cascade(
     job-scheduling + commit + re-read constant per tier that does not
     shrink with cluster size — measured ~3 s core-count-invariant on
     the scaling probe, the single biggest drag on cascade scaling
-    efficiency. Here the tier union writes once, `partitionBy("tier")`,
-    so all constants are paid once; the shared raw→1m shuffle stage is
-    reused across tier branches instead of re-read from disk. Returns
-    the read-back per-tier DataFrames (partition-pruned on `tier`)."""
+    efficiency. Here `cascade_union` (one raw→1m aggregate, then one
+    re-aggregation that emits all three tiers) writes once,
+    `partitionBy("tier")`, so all constants are paid once. Returns the
+    read-back per-tier DataFrames (partition-pruned on `tier`)."""
     out = cascade_union(series)
     if files_per_tier is not None:
         # round-robin into N writer tasks; each writes one file per tier

@@ -8,6 +8,8 @@ reference rollups at every retention tier".
 
 from __future__ import annotations
 
+from itertools import product
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -114,19 +116,35 @@ def test_cascade_equals_from_raw(transcripts):
     pd.testing.assert_frame_equal(from_1m, from_raw)
 
 
-def test_materialize_cascade_matches_chained(transcripts, tmp_path):
+def test_materialize_cascade_matches_chained(transcripts, spark, tmp_path):
     """The single-action partitionBy("tier") write must land exactly the
     rows the chained write→read→write loop would — per tier, bit-for-bit
-    (set equality; ordering is not part of the contract)."""
+    (set equality; ordering is not part of the contract). Inputs: the
+    conv_id-clustered project_series output; a createDataFrame series of
+    unknown partitioning with all-NULL 1m buckets and half-integer values;
+    an empty series, which writes zero part files and must read back
+    zero rows per tier with the declared schema."""
     ser = S.project_series(transcripts)
-    got = rollup.materialize_cascade(ser, str(tmp_path / "tiers"),
-                                     files_per_tier=4)
-    want = rollup.build_cascade(ser)
-    for tier in ("1m", "1h", "1d"):
-        a, b = got[tier], want[tier]
-        assert a.columns == b.columns
-        assert a.exceptAll(b).count() == 0
-        assert b.exceptAll(a).count() == 0
+    t0 = 1_600_041_600  # a UTC midnight
+    rows = [  # 4 series of 100 points, 3 a minute, each over two days
+        (f"c{i // 200}", ("m", "n")[i // 100 % 2], i,
+         t0 + 20 * i + 86400 * (i // 50 % 2),
+         None if (20 * i) // 60 % 17 == 5 else (i % 7) + 0.5 * (i % 2))
+        for i in range(400)
+    ]
+    loose = spark.createDataFrame(rows, ser.schema)
+    empty = spark.createDataFrame([], ser.schema)
+    for n, (src, files) in enumerate(
+            product((ser, loose, empty), (None, 4))):
+        got = rollup.materialize_cascade(src, str(tmp_path / f"t{n}"),
+                                         files_per_tier=files)
+        want = rollup.build_cascade(src)
+        for tier in ("1m", "1h", "1d"):
+            a, b = got[tier], want[tier]
+            assert a.dtypes == b.dtypes
+            assert a.exceptAll(b).count() == 0
+            assert b.exceptAll(a).count() == 0
+            assert (a.count() == 0) == (src is empty)
 
 
 def test_refresh_rollup_equals_full_recompute(transcripts, spark):

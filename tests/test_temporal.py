@@ -255,7 +255,8 @@ def test_gapfill_interp_fused_equals_composed(spark):
     assert composed.exceptAll(fused).count() == 0
     # and the fused plan has no join and at most 2 exchanges
     plan = fused._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan and plan.count("Exchange") <= 2
+    assert "Join" not in plan and "Cartesian" not in plan, plan
+    assert plan.count("Exchange") <= 2, plan
 
 
 def test_metric_corr_and_acf_exact_cases(spark):
